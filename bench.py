@@ -156,6 +156,9 @@ def run_bench(sf_dir: str, runs: int = 1, names: list[str] | None = None) -> dic
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "n_queries": len(timings),
         "runs_per_query": runs,
+        # the slots the sweep actually ran on, not the box's core count
+        "defaultParallelism": spark.sparkContext.defaultParallelism,
+        "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS"),
     }
     spark.stop()
     return result
@@ -244,7 +247,6 @@ def attach_baseline(result: dict, duck: dict[str, float]) -> None:
         timespec="seconds"
     )
     result["duckdb_version"] = _duckdb.__version__
-    result["cores"] = os.cpu_count()
 
 
 #: printed-line budget. The round-1 driver stored only the last 2000

@@ -62,13 +62,68 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+def file_signature(path: str) -> list[tuple[str, int, int]]:
+    """(relative name, size, mtime_ns) of every file under ``path``
+    (the file itself for a single-file table) — change detection
+    without a scan. Recursive: a hive-partitioned directory rewrites
+    files inside day=X/ subdirs without touching the top-level
+    entry's size/mtime, so a shallow listing would miss the change."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return [(os.path.basename(path), st.st_size, st.st_mtime_ns)]
+    out = []
+    for dirpath, dirnames, filenames in os.walk(path):
+        dirnames.sort()
+        for fname in sorted(filenames):
+            fp = os.path.join(dirpath, fname)
+            st = os.stat(fp)
+            out.append((os.path.relpath(fp, path), st.st_size, st.st_mtime_ns))
+    return out
+
+
+#: session confs that change the schema parquet inference returns
+#: for the same files (events.ts surfaces as a long or as
+#: TIMESTAMP_NTZ depending on the first two)
+_INFERENCE_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+_SCHEMA_CACHE: "WeakKeyDictionary[SparkSession, dict[str, tuple]]" = WeakKeyDictionary()
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its per-call schema
+    inference job. The inferred schema is cached per session under
+    the files' :func:`file_signature` and the inference confs; a hit
+    reads with the schema given, which starts no Spark job. Every
+    call still returns a fresh DataFrame (rebuild-per-run holds). A
+    path that is not a local file or directory takes the plain read,
+    so its errors stay Spark's own."""
+    if not os.path.exists(path):
+        return spark.read.parquet(path)
+    key = (file_signature(path), [spark.conf.get(k) for k in _INFERENCE_CONFS])
+    cache = _SCHEMA_CACHE.setdefault(spark, {})
+    hit = cache.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    cache[path] = (key, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Parquet → columnar scan with predicate
     pushdown and column pruning for free (Catalyst handles both as
-    long as downstream code stays declarative)."""
+    long as downstream code stays declarative). The schema comes from
+    :func:`read_parquet`'s per-session cache, so a repeat load starts
+    no inference job."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         df = normalize_events_ts(df)
     return df

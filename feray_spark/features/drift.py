@@ -49,7 +49,7 @@ the cast semantics:
   NULLs: 1e10 is far under the cast's 1e19 overflow threshold).
   Such rows contribute the LONG y to a compact
   scale-0 sum (value 100*sum); all other rows (more than 2
-  fractional digits, |d| >= 1e9, NaN/Inf/NULL) keep the native cast
+  fractional digits, |d| >= 1e10, NaN/Inf/NULL) keep the native cast
   and native decimal sum. The two partial sums recombine exactly
   once per group: fast_total = cast(sum_y as decimal(34,0)) *
   0.01 -> decimal(37,2) (exact — no precision-loss adjustment),

@@ -36,6 +36,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from feray_spark.catalog import file_signature, read_parquet
 from feray_spark.features.versioning import (
     CODE_VERSION_COL,
     code_version,
@@ -129,7 +130,7 @@ class FeatureStore:
         if name in self.views:
             return self.store.read(self.spark, name)
         if name in self.sources:
-            return self.spark.read.parquet(self.sources[name])
+            return read_parquet(self.spark, self.sources[name])
         if self.store.latest_version(name) is not None:
             return self.store.read(self.spark, name)
         raise KeyError(f"unknown input {name!r}")
@@ -148,25 +149,8 @@ class FeatureStore:
             if commit is None:
                 raise KeyError(f"unknown input {name!r}")
             return f"table:{commit.version}"
-        path = self.sources[name]
-        entries = []
-        if os.path.isdir(path):
-            # recursive: a hive-partitioned source rewrites files inside
-            # day=X/ subdirs without touching the top-level entry's
-            # size/mtime — a shallow listdir digest would serve stale
-            # memo hits over changed data
-            for dirpath, dirnames, filenames in os.walk(path):
-                dirnames.sort()
-                for fname in sorted(filenames):
-                    fp = os.path.join(dirpath, fname)
-                    st = os.stat(fp)
-                    entries.append(
-                        (os.path.relpath(fp, path), st.st_size, st.st_mtime_ns)
-                    )
-        else:
-            st = os.stat(path)
-            entries.append((os.path.basename(path), st.st_size, st.st_mtime_ns))
-        digest = hashlib.sha256(json.dumps(entries).encode()).hexdigest()
+        sig = file_signature(self.sources[name])
+        digest = hashlib.sha256(json.dumps(sig).encode()).hexdigest()
         return f"src:{digest}"
 
     def _stamp_versions(self, df: DataFrame, view: FeatureView) -> DataFrame:
@@ -582,7 +566,7 @@ class FeatureStore:
             return self.store.read_stream(self.spark, name)
         if name in self.sources:
             src = self.sources[name]
-            schema = self.spark.read.parquet(src).schema
+            schema = read_parquet(self.spark, src).schema
             if os.path.isdir(src):
                 stage = src
             else:

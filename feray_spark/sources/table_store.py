@@ -76,34 +76,45 @@ class Commit:
     stats: dict[str, Any] = field(default_factory=dict)
 
 
-def _has_data_files(seg: str) -> bool:
-    """Whether a just-written segment contains any parquet file. A
-    zero-row ``partitionBy`` write emits only _SUCCESS; committing the
-    empty directory as a segment would break later partitioned reads
-    (schema inference finds nothing), so writers drop such segments."""
-    for _root, _dirs, files in os.walk(seg):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
+def _hidden(name: str) -> bool:
+    """Spark's file-index rule: ``_``/``.``-prefixed names (_SUCCESS,
+    .crc checksums, _temporary) are not data; a ``_`` name carrying
+    ``=`` is a partition directory and is kept."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
 
 
-def _segment_stats(seg: str) -> dict[str, list]:
-    """Column (min, max) for one segment, from the parquet FOOTERS
-    only — a driver-side metadata read, no data IO (the same numbers
-    the scan's row-group pruning uses, hoisted into the commit log
-    so whole segments prune before any file listing). Only
-    JSON-safe primitive types (int/float/str/bool) participate;
-    a column with a missing stat in any row group drops out."""
+def _segment_footers(seg: str) -> tuple[int, int, dict[str, list]]:
+    """(data files, rows, column stats) of one written segment or
+    carried partition directory, from the parquet FOOTERS only — a
+    driver-side metadata read, no data IO and no Spark job. Files and
+    directories are skipped exactly as Spark's file index skips them
+    (:func:`_hidden`), so the row total is what a ``count()`` of the
+    directory returns.
+
+    Zero files means a zero-row ``partitionBy`` write that emitted
+    only _SUCCESS; committing that empty directory as a segment would
+    break later partitioned reads (schema inference finds nothing), so
+    writers drop it.
+
+    Stats are column (min, max): the same numbers the scan's row-group
+    pruning uses, hoisted into the commit log so whole segments prune
+    before any file listing. Only JSON-safe primitive types
+    (int/float/str/bool) participate; a column with a missing stat in
+    any row group drops out."""
     import pyarrow.parquet as pq
 
+    n_files = rows = 0
     mins: dict[str, Any] = {}
     maxs: dict[str, Any] = {}
     dead: set[str] = set()
-    for root, _dirs, files in os.walk(seg):
+    for root, dirs, files in os.walk(seg):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
         for name in files:
-            if not name.endswith(".parquet"):
+            if _hidden(name):
                 continue
             md = pq.ParquetFile(os.path.join(root, name)).metadata
+            n_files += 1
+            rows += md.num_rows
             for rg in range(md.num_row_groups):
                 g = md.row_group(rg)
                 for ci in range(g.num_columns):
@@ -123,9 +134,8 @@ def _segment_stats(seg: str) -> dict[str, list]:
                         mins[cname] = st.min
                     if cname not in maxs or st.max > maxs[cname]:
                         maxs[cname] = st.max
-    return {
-        c: [mins[c], maxs[c]] for c in mins if c not in dead and c in maxs
-    }
+    stats = {c: [mins[c], maxs[c]] for c in mins if c not in dead and c in maxs}
+    return n_files, rows, stats
 
 
 def _align_to_schema(df: DataFrame, fields) -> DataFrame:
@@ -214,9 +224,10 @@ class TableStore:
         merge_schema: bool = False,
         expected_base: Any = _NO_BASE,
     ) -> Commit:
-        """Append or overwrite, creating version latest+1. The row
-        count is collected from the write via ``df.count()`` on the
-        written files (cheap: parquet metadata only).
+        """Append or overwrite, creating version latest+1. The new
+        segment's row count and column stats come from one walk over
+        the written files' parquet footers — no Spark job beyond the
+        write itself.
 
         ``expected_base`` — optimistic pin for read-modify-write
         callers (MERGE, replaceWhere's rewrite path): the snapshot
@@ -268,15 +279,14 @@ class TableStore:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(seg)
-        spark = df.sparkSession
-        if _has_data_files(seg):
-            n_new = spark.read.parquet(seg).count()
+        n_files, n_new, seg_stats = _segment_footers(seg)
+        if n_files:
             new_segs = [seg]
         else:
             # zero-row partitioned write: no files — commit without the
             # segment instead of poisoning later reads
             shutil.rmtree(seg, ignore_errors=True)
-            n_new, new_segs, seg = 0, [], None
+            new_segs, seg = [], None
         segments = (
             new_segs if mode == "overwrite" or prev is None
             else [*prev.segments, *new_segs]
@@ -284,7 +294,7 @@ class TableStore:
         row_count = n_new if mode == "overwrite" or prev is None else prev.row_count + n_new
         stats = {} if mode == "overwrite" or prev is None else dict(prev.stats)
         if seg is not None:
-            stats[seg] = _segment_stats(seg)
+            stats[seg] = seg_stats
         return self._commit(
             table,
             Commit(
@@ -757,7 +767,7 @@ class TableStore:
             if c.mode == "append":
                 # the appended data = segments NEW in this commit, not
                 # segments[-1]: a zero-row append commits no segment
-                # (write()'s _has_data_files guard), so [-1] would
+                # (write()'s empty-segment guard), so [-1] would
                 # replay the PREVIOUS commit's segment as inserts
                 prev_c = commits.get(v - 1)
                 # key on the resolved (path, base) pair: a segment
@@ -1050,7 +1060,8 @@ class TableStore:
         if prev.partition_by:
             writer = writer.partitionBy(*prev.partition_by)
         writer.parquet(seg)
-        if not _has_data_files(seg):
+        n_files, rows, seg_stats = _segment_footers(seg)
+        if not n_files:
             # empty table: a zero-row partitionBy write emits only
             # _SUCCESS; committing it would poison later partitioned
             # reads (same guard as write/replace_where). OPTIMIZE of
@@ -1064,14 +1075,14 @@ class TableStore:
                 mode="optimize",
                 segments=[seg],
                 schema=prev.schema,
-                row_count=prev.row_count,
+                row_count=rows,
                 timestamp=time.time(),
                 user_metadata={
                     **(user_metadata or {}),
                     "optimize": {"zorder_by": zorder_by, "n_files": files},
                 },
                 partition_by=prev.partition_by,
-                stats={seg: _segment_stats(seg)},
+                stats={seg: seg_stats},
             ),
             new_segment=seg,
         )
@@ -1371,7 +1382,8 @@ class TableStore:
                     .partitionBy(*prev.partition_by)
                     .parquet(seg)
                 )
-                if _has_data_files(seg):
+                n_files, n_new, seg_stats = _segment_footers(seg)
+                if n_files:
                     # validate from the WRITTEN segment (partition-
                     # pruned footer-cheap scan) instead of executing
                     # the replacement plan a second time up front —
@@ -1397,22 +1409,14 @@ class TableStore:
                             "replacement violates replaceWhere predicate "
                             f"for {bad} rows"
                         )
-                    n_new = spark.read.parquet(seg).count()
                 else:
                     # empty replacement = delete-the-matched-partitions:
                     # commit only the carried dirs (an empty segment
                     # would break schema inference on later reads)
                     shutil.rmtree(seg, ignore_errors=True)
-                    n_new, seg = 0, None
-                n_carried = 0
-                if carried:  # parquet footer counts only — no data IO
-                    by_base: dict[str, list[str]] = {}
-                    for d, b in carried:
-                        by_base.setdefault(b, []).append(d)
-                    for b, ds in by_base.items():
-                        n_carried += (
-                            spark.read.option("basePath", b).parquet(*ds).count()
-                        )
+                    seg = None
+                # parquet footer counts only — no data IO, no job
+                n_carried = sum(_segment_footers(d)[1] for d, _ in carried)
                 segments: list[Any] = [
                     {"path": d, "base": b} for d, b in carried
                 ] + ([seg] if seg is not None else [])
@@ -1430,7 +1434,7 @@ class TableStore:
                     partition_by=prev.partition_by,
                     # carried partition dirs have no stats entry and are
                     # conservatively kept by segments_in_range
-                    stats={seg: _segment_stats(seg)} if seg is not None else {},
+                    stats={seg: seg_stats} if seg is not None else {},
                 )
                 return self._commit(table, commit, new_segment=seg)
         # fallback validation: one plan execution total — pin the

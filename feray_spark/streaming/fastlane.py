@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from feray_spark.catalog import normalize_events_ts, table_path
+from feray_spark.catalog import normalize_events_ts, read_parquet, table_path
 from feray_spark.operators.topk import latest_per_key
 from feray_spark.sources.table_store import TableStore
 
@@ -40,11 +40,11 @@ def _stage_file_stream(
     """File-source stream over a single parquet file via the shared
     private staging helper (sources/staging.py — per-user 0700 root,
     foreign links replaced, not trusted). The schema comes from the
-    parquet footer (one driver-side metadata read, no data scan)."""
+    parquet footer, cached per session by ``catalog.read_parquet``."""
     from feray_spark.sources.staging import private_stage_root, stage_single_file
 
     stage = stage_single_file(src, private_stage_root(prefix))
-    schema = spark.read.parquet(src).schema
+    schema = read_parquet(spark, src).schema
     return spark.readStream.schema(schema).format("parquet").load(stage)
 
 

@@ -36,7 +36,7 @@ def render(bench: dict, *, measured_on: str) -> str:
     # numbers the 2x gate is argued against
     swept_at = bench.get("swept_at", "unrecorded (pre-r6 sweep)")
     duck_ver = bench.get("duckdb_version", "unrecorded")
-    cores = bench.get("cores", "unrecorded")
+    slots = bench.get("defaultParallelism", "unrecorded")
     return f"""
 ## Measured DuckDB baseline (sf{sf}, the sweep box)
 
@@ -44,7 +44,7 @@ Table regenerated {measured_on} by
 `scripts/refresh_baseline_table.py` from the committed full-sweep
 evidence in `BENCH_FULL.json` (produced by `python bench.py`).
 Sweep provenance as recorded by the sweep itself: swept {swept_at},
-DuckDB {duck_ver} default config, {cores} cores, parquet inputs at
+Spark on {slots} slots, DuckDB {duck_ver} default config, parquet inputs at
 `/root/testdata/sf{sf}`, page-cache warm, median of {runs} runs per
 query — the same run that produced the Spark-side numbers, so both
 sides share one box phase (docs/BENCH_NOTES.md documents the

@@ -31,7 +31,8 @@ def _fake_result(timings):
         },
         "swept_at": "2026-08-18T00:00:00+00:00",
         "duckdb_version": "1.0.0",
-        "cores": 32,
+        "defaultParallelism": 32,
+        "SPARK_GRAFT_CPUS": "32",
     }
 
 

@@ -1156,7 +1156,7 @@ def test_drift_report_fast_paths_match_generic_leg(spark):
     doubles, scale-0 compact sums for integrals, source-scale sums
     for decimals) must be VALUE-IDENTICAL to the generic
     cast-to-decimal(28,9) leg on an adversarial corner set: signed
-    zero, half-way 9th-digit values, |v| at the 1e9 fast-leg gate,
+    zero, half-way 9th-digit values, |v| at the 1e10 fast-leg gate,
     values at the decimal(28,9) overflow threshold (1e19), NaN/Inf,
     Long.MIN/MAX, and a wide decimal(38,0) whose big values the cast
     NULLs out of numerator and denominator alike."""
@@ -1172,7 +1172,8 @@ def test_drift_report_fast_paths_match_generic_leg(spark):
         1e-18, 2.9999999999999996, 999999999.99, -999999999.99, 1e9,
         1234567890.25, 6.02e23, 1e300, nan, inf, -inf, None, 0.1,
         1 / 3, -1 / 3, 2**53 + 1.0, 9.223372036854776e16, 5e18,
-        9.5e18, 1.5e19, 0.995, 123456.78,
+        9.5e18, 1.5e19, 0.995, 123456.78, 9999999999.99,
+        -9999999999.99, 1e10, -1e10,
     ]
     longs = [
         0, 1, -1, 150000, 2**33 * 64, -(2**33) * 64, (1 << 62),
